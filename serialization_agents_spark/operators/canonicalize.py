@@ -25,11 +25,19 @@ Each iteration is two shuffles on (key, entity); `localCheckpoint()`
 truncates lineage so plans stay O(1) per iteration (SURVEY.md §4.2.2;
 cf. the BTS/large-star-small-star literature in PAPERS.md). Convergence
 takes O(log n) iterations on pathological chains, 1-2 on real data.
+
+Driver actions: every count the loop needs rides an eager checkpoint
+that runs anyway, as an `Observation` filled by that same pass — the
+changed-label count of an iteration is observed on the iteration's
+checkpoint, the active-edge count on the shared-key checkpoint, the
+agents row count on the input checkpoint. No probe launches a job of
+its own (the checkpoints must stay eager: a lazy one fills no
+Observation).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from serialization_agents_spark.functions.normalize import normalize_name_expr
@@ -95,32 +103,26 @@ def _connected_components_ex(
     # this shrinks the iterated set by orders of magnitude (most entities
     # collide with nobody), so each iteration shuffles only actual
     # merge-candidates.
+    counted = Observation()
     shared_keys = (
         edges.groupBy("merge_key")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") > 1)
+        # an edge is active iff its key is shared, so the shared keys'
+        # edge total IS the active-edge count — observed on the pass that
+        # pins the keys, not probed by an action of its own
+        .observe(counted, F.sum("n").alias("n_active"))
         .select("merge_key")
         # small by construction (only colliding keys); pinned so the
-        # zero-merge probe below and the semi-join share one computation
-        .localCheckpoint(eager=False)
+        # zero-merge test below and the semi-join share one computation
+        .localCheckpoint()
     )
+    n_active = counted.get["n_active"] or 0
     iters = 0
-    # cheap zero-merge probe: no shared key => no active entity. This
-    # answers the common no-collision case from the key aggregate alone,
-    # WITHOUT materializing (and checkpoint-writing) the semi-joined
-    # edge set just to count it.
-    if shared_keys.isEmpty():
-        return (
-            all_nodes.select("entity_key", F.col("entity_key").alias("component")),
-            iters,
-            0,
-        )
-    active = edges.join(shared_keys, "merge_key", "left_semi")
-
-    e = active.select("entity_key", "merge_key").localCheckpoint()
-
-    n_active = e.count()
-    if n_active == 0:  # unreachable given the probe; kept as a guard
+    if n_active == 0:
+        # no shared key => no active entity: the common no-collision case
+        # is answered from the key aggregate alone, WITHOUT materializing
+        # (and checkpoint-writing) the semi-joined edge set
         return (
             all_nodes.select("entity_key", F.col("entity_key").alias("component")),
             iters,
@@ -136,18 +138,25 @@ def _connected_components_ex(
     spark = edges.sparkSession
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cc_parts = max(8, min(session_parts, n_active // 100_000 + 1))
-    e = e.repartition(cc_parts, "entity_key").localCheckpoint()
+    e = (
+        edges.join(shared_keys, "merge_key", "left_semi")
+        .select("entity_key", "merge_key")
+        .repartition(cc_parts, "entity_key")
+        .localCheckpoint()
+    )
 
     labels = e.select("entity_key").dropDuplicates().select(
         "entity_key", F.col("entity_key").alias("label")
     )
     # Broadcast gate is the DISTINCT ENTITY count (= label-map rows, the
     # thing actually broadcast), not the edge count — an entity averages
-    # >1 edge, so gating on edges disabled the fast path too early.
-    n_entities = labels.count()
-    labels, iters = _cc_loop(
-        e, labels, cc_parts, n_entities <= BROADCAST_LABELS_MAX, max_iterations
+    # >1 edge, so gating on edges disabled the fast path too early. Every
+    # active entity has an active edge, so n_active bounds that count:
+    # it is counted only when the bound alone cannot decide the gate.
+    broadcast_maps = (
+        n_active <= BROADCAST_LABELS_MAX or labels.count() <= BROADCAST_LABELS_MAX
     )
+    labels, iters = _cc_loop(e, labels, cc_parts, broadcast_maps, max_iterations)
 
     active_labels = labels.select("entity_key", F.col("label").alias("component"))
     # Singletons are their own component.
@@ -209,10 +218,15 @@ def _cc_loop(
                 (F.col("changed") | (F.col("jump") < F.col("label"))).alias("changed"),
             )
         )
-        merged = merged.localCheckpoint()  # cut lineage growth per iteration
-        n_changed = merged.where(F.col("changed")).count()
-        labels = merged.select("entity_key", "label")
-        if n_changed == 0:
+        # cut lineage growth per iteration; the changed-label count rides
+        # the same (eager) checkpoint pass instead of a second action
+        changed = Observation()
+        labels = (
+            merged.observe(changed, F.count_if("changed").alias("n"))
+            .select("entity_key", "label")
+            .localCheckpoint()
+        )
+        if changed.get["n"] == 0:
             break
     return labels, iters
 
@@ -260,11 +274,15 @@ def canonicalize_agents(
 ) -> tuple[DataFrame, int]:
     """Merge agent rows whose components collide; returns (canonical
     agents, cc_iterations). Input is `merge_entities` output."""
-    # The CC machinery below issues several driver actions (edge counts,
-    # convergence counts, the output checkpoint); `agents` sits on the
-    # far side of the fact-table merge shuffle, so materialize it ONCE —
-    # entity-scale — instead of re-running the merge per action.
-    agents = agents.localCheckpoint(eager=True)
+    # The CC machinery below reads `agents` several times (edges, the
+    # singleton branch, the group-merge join); it sits on the far side of
+    # the fact-table merge shuffle, so materialize it ONCE — entity-scale
+    # — instead of re-running the merge per action. The same pass counts
+    # its rows.
+    counted = Observation()
+    agents = agents.observe(counted, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
     edges = build_merge_edges(agents)
     labels, iters, n_active = _connected_components_ex(edges, max_iterations)
 
@@ -290,10 +308,11 @@ def canonicalize_agents(
     # aggregate expression per row without codegen), so keeping singletons
     # out of it is a large constant-factor win at any scale.
     comp_sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("_csize"))
-    # The label map is bounded by the entity count; below the CC loop's
+    # The label map has one row per entity — the agents row count, as
+    # entity_key is unique in merge_entities output; below the CC loop's
     # broadcast gate ship it broadcast so the agents join never plans a
     # stats-blind sort-merge against the checkpointed frames.
-    n_labels = labels.count()
+    n_labels = counted.get["n"]
     _maybe_b = F.broadcast if n_labels <= BROADCAST_LABELS_MAX else (lambda df: df)
     lab2 = labels.join(_maybe_b(comp_sizes), "component")
     joined = agents.join(_maybe_b(lab2), "entity_key").persist()
@@ -303,15 +322,9 @@ def canonicalize_agents(
     # The heavy merge below is entity-scale; pre-partition it on the group
     # key with a width sized to the (small) multi-member row count so the
     # groupBy reuses the partitioning instead of a full-width exchange.
-    # (Derived from comp_sizes — labels-scale — so sizing it does not
-    # force the agents join to materialize early.)
-    n_multi = (
-        comp_sizes.where(F.col("_csize") > 1)
-        .agg(F.sum("_csize").alias("n"))
-        .collect()[0]["n"]
-        or 0
-    )
-    agg_parts = max(8, n_multi // 100_000 + 1)
+    # Multi-member rows are exactly the active entities, each with at
+    # least one active edge, so the active-edge count bounds them.
+    agg_parts = max(8, n_active // 100_000 + 1)
     a = (
         joined.where(F.col("_csize") > 1)
         .drop("_csize")

@@ -38,9 +38,9 @@ def enumerate_ids(
     )
     parted = parted.localCheckpoint()  # pin partitioning; counts must match
 
-    counts = (
-        parted.groupBy("_pid").count().orderBy("_pid").collect()
-    )  # O(num_partitions) rows on the driver — the reference's count-split
+    # O(num_partitions) rows on the driver — the reference's count-split;
+    # ordered here, not by a Spark sort (which costs its own jobs)
+    counts = sorted(parted.groupBy("_pid").count().collect(), key=lambda r: r["_pid"])
     offsets, acc = {}, 0
     for row in counts:
         offsets[row["_pid"]] = acc

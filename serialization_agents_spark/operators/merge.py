@@ -204,11 +204,8 @@ def score_alt_forms(agents: DataFrame) -> DataFrame:
     has_alt = agents.where(F.size("alt_forms") > 0)
     no_alt = agents.where(F.size("alt_forms") == 0)
 
-    # entity-scale width derived from the row count (same pattern as
-    # canonicalize's cc_parts — a fixed constant would cap this stage at
-    # scale); the input is checkpointed by canonicalize_agents, so the
-    # count action is cheap.
-    parts = max(8, has_alt.count() // 100_000 + 1)
+    # The exchange is a projection barrier. It has no explicit width, so
+    # AQE coalesces it to the entity-scale data; no count action sizes it.
     af = has_alt.select(
         "entity_key", "name_controlled", F.explode("alt_forms").alias("af"),
         # pre-project the normalized scorer args: the exchange below makes
@@ -216,7 +213,7 @@ def score_alt_forms(agents: DataFrame) -> DataFrame:
         # normalize regex into every step of the interpreted fuzzy walk
         normalize_name_expr(F.col("name_controlled")).alias("_nc_norm"),
         normalize_name_expr(F.col("af.name")).alias("_af_norm"),
-    ).repartition(parts, "entity_key")  # entity-scale width + projection barrier
+    ).repartition("entity_key")
     same = F.col("af.name") == F.col("name_controlled")
     scored = af.select(
         "entity_key",

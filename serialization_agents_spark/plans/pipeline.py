@@ -15,11 +15,33 @@ CC = 2 shuffles x iterations over the (small) entity set; enumerate = 1
 range shuffle of entities; triples narrow + 1 join for merged-key remap.
 The 100 TB fact table is shuffled exactly ONCE (the merge).
 
+Driver-action budget (verify with a job group per call site and
+`statusTracker().getJobIdsForGroup`): Spark jobs of one cold runner.py
+job over perfbench's kg_build input (seed 101, 2 CC rounds), was -> now.
+Every count is observed on a pass that runs anyway; none is its own job.
+
+    source reads                          4 -> 4
+    stage writes                         21 -> 21
+    stage read-backs                      6 -> 0   written schema reused
+    lineage rows                         12 -> 12
+    link (name-block checkpoint)          1 -> 1
+    canonicalize                         48 -> 33
+      CC front (shared keys, edge set)   11 -> 5
+      per CC round                       10 -> 8   changed-count observed
+      label-map / multi-member probes     5 -> 0
+    alt-form scoring                      2 -> 0   AQE-sized exchange
+    enumerate                            10 -> 8   offsets sorted on driver
+    error side table                      4 -> 3
+    runner summary counts                 6 -> 0   stage write counters
+    total                               114 -> 82
+    full resume                          81 -> 20  CC/alt/enumerate skipped
+
 Resume: when `out_dir` is given, each stage writes parquet + lineage and
 a completed stage (parquet `_SUCCESS` present) is READ BACK instead of
 recomputed on the next run — the Spark translation of the reference's
 re-queue-on-restart worker protocol
 (/root/reference/lib/shadowcat_serialize_viaf_agents.js:78-84,128-137).
+A read-back canonical stage runs no CC, alt-form scoring or enumeration.
 """
 
 from __future__ import annotations
@@ -55,7 +77,9 @@ class PipelineResult:
     canonical: DataFrame | None = None
     triples: DataFrame | None = None
     errors: DataFrame | None = None  # S15 audit side table
-    cc_iterations: int = 0
+    # CC rounds this run made; 0 when stopped before canonicalize, None
+    # when the canonical stage was resumed (no CC ran)
+    cc_iterations: int | None = 0
     stages_resumed: list[str] = field(default_factory=list)
     stages_computed: list[str] = field(default_factory=list)
     # A7/X13 — per-stage observe() counters (the Spark-native analogue of
@@ -118,6 +142,17 @@ def run_pipeline(
     computed: list[str] = []
     observations: dict[str, Observation] = {}
 
+    def read_back(stage: str) -> DataFrame | None:
+        """The stage's frame read back from out_dir when a previous run
+        completed it (parquet `_SUCCESS` present), else None."""
+        if out_dir is None or not _is_complete(out_dir, stage):
+            return None
+        resumed.append(stage)
+        if stage == "agents" and agents_table is not None:
+            if spark.catalog.tableExists(agents_table):
+                return read_bucketed(spark, agents_table)
+        return spark.read.parquet(_stage_path(out_dir, stage))
+
     def materialize(df: DataFrame, stage: str, key_col: str) -> DataFrame:
         """Write stage output + lineage if out_dir set; resume if present.
 
@@ -134,23 +169,20 @@ def run_pipeline(
             if cache and stage in ("linked", "canonical"):
                 return df.persist()
             return df
+        done = read_back(stage)
+        if done is not None:
+            return done
         path = _stage_path(out_dir, stage)
-        bucketed = stage == "agents" and agents_table is not None
-        if _is_complete(out_dir, stage):
-            resumed.append(stage)
-            if bucketed and spark.catalog.tableExists(agents_table):
-                return read_bucketed(spark, agents_table)
-            return spark.read.parquet(path)
         obs = Observation(f"{run_id}:{stage}")
         df = df.observe(obs, F.count(F.lit(1)).alias("row_count"))
-        if bucketed:
+        if stage == "agents" and agents_table is not None:
             write_bucketed(df, agents_table, path, ["entity_key"])
-            observations[stage] = obs
             out = read_bucketed(spark, agents_table)
         else:
             df.write.mode("overwrite").parquet(path)
-            observations[stage] = obs  # filled: the write action ran above
-            out = spark.read.parquet(path)
+            # the written schema is known: no footer-reading inference job
+            out = spark.read.schema(df.schema).parquet(path)
+        observations[stage] = obs  # filled: the write action ran above
         stage_metrics(out, run_id, stage, key_col).write.mode("append").parquet(
             os.path.join(out_dir, "_metrics")
         )
@@ -194,12 +226,17 @@ def run_pipeline(
             dead_viaf=dead, agents=agents,
         )
 
-    canonical, iters = canonicalize_agents(agents)
-    canonical = score_alt_forms(canonical)  # X2/X3 on entity-scale rows
-    if out_dir is None and cache:
-        canonical = canonical.persist()  # 7 union branches read it below
-    canonical = enumerate_ids(canonical, order_col="entity_key")
-    canonical = materialize(canonical, "canonical", "entity_key")
+    # A resumed canonical stage declares none of CC, alt-form scoring or
+    # enumeration: they run driver actions as soon as they are called.
+    iters = None
+    canonical = read_back("canonical")
+    if canonical is None:
+        canonical, iters = canonicalize_agents(agents)
+        canonical = score_alt_forms(canonical)  # X2/X3 on entity-scale rows
+        if out_dir is None and cache:
+            canonical = canonical.persist()  # 7 union branches read it below
+        canonical = enumerate_ids(canonical, order_col="entity_key")
+        canonical = materialize(canonical, "canonical", "entity_key")
     if cutoff == 4:
         return _partial(
             pages=pages_x, mentions=mentions, linked=linked,
@@ -215,8 +252,9 @@ def run_pipeline(
 
     errors = pipeline_errors(pages_x, mentions, dead, blacklist)
     if out_dir is not None:
-        errors.write.mode("overwrite").parquet(os.path.join(out_dir, "_errors"))
-        errors = spark.read.parquet(os.path.join(out_dir, "_errors"))
+        errors_path = os.path.join(out_dir, "_errors")
+        errors.write.mode("overwrite").parquet(errors_path)
+        errors = spark.read.schema(errors.schema).parquet(errors_path)
 
     return PipelineResult(
         pages=pages_x,

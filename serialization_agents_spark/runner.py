@@ -16,13 +16,22 @@ Nothing here hand-schedules: the driver declares the pipeline
 physical plan at whatever executor count spark-submit provides — the
 N-vs-4N criterion needs zero code changes between cluster sizes.
 
-Resume is free: re-submitting with the same --out-dir skips every stage
-whose _SUCCESS marker exists (per-partition lineage rows in
-<out>/_metrics carry counts + checksums for the audit trail).
+Resume: re-submitting with the same --out-dir reads back every stage
+whose _SUCCESS marker exists instead of recomputing it (per-partition
+lineage rows in <out>/_metrics carry counts + checksums for the audit
+trail). A resumed canonical stage skips the CC loop, alt-form scoring
+and enumeration entirely. Resume is cheap, not free: each read-back
+infers its parquet schema (one small job), the `_errors` side table is
+always recomputed from the stages it audits, and the summary counts
+resumed stages' rows.
 
-Exit contract: prints one JSON summary line on success (stage rows,
-resume status, cc iterations) and exits non-zero on any failure, so a
-workflow scheduler can gate downstream jobs on it.
+Exit contract: prints one JSON summary line on success and exits
+non-zero on any failure, so a workflow scheduler can gate downstream
+jobs on it. The summary carries the stage row counts (`n_triples`,
+`n_entities`, `n_agents`; None past `--until`), taken from the stage
+writes' observed counters for computed stages and counted for resumed
+ones; `cc_iterations` (None when the canonical stage was resumed); and
+the computed / resumed stage lists.
 """
 
 from __future__ import annotations
@@ -124,15 +133,22 @@ def main(argv: list[str] | None = None) -> int:
         agents_table=args.agents_table,
         until=args.until,
     )
+
+    def n_rows(stage: str, df) -> int | None:
+        # a computed stage's write already counted it; count resumed ones
+        if df is None:
+            return None
+        if stage in res.observations:
+            return res.observations[stage].get["row_count"]
+        return df.count()
+
     summary = {
         "run_id": args.run_id,
         "out_dir": args.out_dir,
         "until": args.until,
-        "n_triples": res.triples.count() if res.triples is not None else None,
-        "n_entities": (
-            res.canonical.count() if res.canonical is not None else None
-        ),
-        "n_agents": res.agents.count() if res.agents is not None else None,
+        "n_triples": n_rows("triples", res.triples),
+        "n_entities": n_rows("canonical", res.canonical),
+        "n_agents": n_rows("agents", res.agents),
         "cc_iterations": res.cc_iterations,
         "stages_computed": res.stages_computed,
         "stages_resumed": res.stages_resumed,

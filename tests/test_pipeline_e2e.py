@@ -231,3 +231,16 @@ def test_bucketed_agents_stage_joins_without_exchange(spark, corpus, tmp_path):
     assert "Exchange" not in _plan(
         res2.agents.groupBy("entity_key").agg(F.count(F.lit(1)).alias("c"))
     )
+
+
+def test_read_back_schema_matches_resumed_schema(spark, corpus, tmp_path):
+    """A computed stage is read back with the schema it was written with
+    (no inference job); a resumed stage infers it from the files. Both
+    must hand downstream exactly the same schema."""
+    pages, authority, redirects, blacklist = corpus
+    out = str(tmp_path / "schemas")
+    fresh = run_pipeline(spark, pages, authority, redirects, blacklist, out_dir=out)
+    again = run_pipeline(spark, pages, authority, redirects, blacklist, out_dir=out)
+    assert not again.stages_computed and again.cc_iterations is None
+    for name in ("pages", "mentions", "linked", "agents", "canonical", "triples"):
+        assert getattr(fresh, name).schema == getattr(again, name).schema, name

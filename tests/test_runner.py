@@ -45,6 +45,36 @@ def test_runner_cli_parses_and_validates():
         p.parse_args(["--pages", "/p"])  # authority + out-dir required
 
 
+def test_summary_counts_match_written_stages(spark, tmp_path, capsys):
+    """The summary's row counts come from the stage writes' observed
+    counters on a computed run and from counting on a resumed run; both
+    must equal the rows on disk."""
+    from serialization_agents_spark import runner
+
+    pages_dir, auth_dir = str(tmp_path / "pages"), str(tmp_path / "authority")
+    synth.synth_pages(spark, n_pages=60, n_auth=30, partitions=2).write.parquet(pages_dir)
+    synth.synth_authority(spark, n_auth=30).write.parquet(auth_dir)
+    out_dir = str(tmp_path / "out")
+    argv = ["--pages", pages_dir, "--authority", auth_dir, "--out-dir", out_dir]
+    conf = spark.conf.getAll  # runner's get_spark reuses this session
+    try:
+        summaries = []
+        for _ in range(2):
+            assert runner.main(argv) == 0
+            summaries.append(json.loads(capsys.readouterr().out.splitlines()[-1]))
+    finally:
+        for k, v in conf.items():
+            if spark.conf.get(k, None) != v:
+                spark.conf.set(k, v)
+    computed, resumed = summaries
+    assert computed["stages_computed"] and not resumed["stages_computed"]
+    assert resumed["cc_iterations"] is None
+    for key, stage in [("n_triples", "triples"), ("n_entities", "canonical"),
+                       ("n_agents", "agents")]:
+        want = spark.read.parquet(os.path.join(out_dir, stage)).count()
+        assert computed[key] == resumed[key] == want, key
+
+
 def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     # Inputs written with the session fixture (cheap), consumed by a
     # SEPARATE spark-submit JVM below.
